@@ -95,7 +95,7 @@ object Curation {
     * run-unique string. */
   def nearDupStage(d: DataFrame, tag: String): DataFrame = {
     val spark = d.sparkSession
-    val withSh = Dedup.memoizedPersisted(spark, s"curation-sigs|$tag", eager = true)(
+    val withSh = SessionMemo.frames(spark, s"curation-sigs|$tag", eager = true)(
       Dedup.shingleSigSets(d))
     val pairs = Dedup.minhashPairsOf(withSh)
       .select(col("ida"), col("idb"))
@@ -129,7 +129,7 @@ object Curation {
     val benchIdd =
       if (bench.columns.contains("doc_id")) bench
       else bench.withColumn("doc_id", monotonically_increasing_id())
-    val benchSh = Dedup.memoizedPersisted(spark, s"curation-bench|$tag", eager = true)(
+    val benchSh = SessionMemo.frames(spark, s"curation-bench|$tag", eager = true)(
       Dedup.shingleHashSets(benchIdd)
         .select(explode(col("sh")).as("shingle")).distinct())
     val nBench = benchSh.count()

@@ -205,186 +205,14 @@ object Dedup {
     edges.flatMap(e => Seq(e._1, e._2)).distinct.map(v => (v, find(v)))
   }
 
-  /** Per-(session, sfDir) memo of the persisted LSH working set: the
-    * three dedup queries (minhash, clusters, keep) and repeated
-    * Profile/Verify invocations all reuse ONE cached DataFrame
-    * instead of registering a fresh CacheManager entry per call
-    * (which would accumulate for the session's lifetime). If an
-    * external `clearCache()` dropped the data, the same plan is
-    * re-persisted — still a single entry.
-    *
-    * Lifecycle: a memoized DataFrame strongly references its session,
-    * so weak-keying alone cannot collect entries (the value would pin
-    * the key). Every access (a) prunes entries whose context has
-    * stopped and (b) LRU-bounds the map to `sigSetMemoCap` entries —
-    * the evicted DataFrame is unpersisted, so a long session cycling
-    * through many (sfDir, n, k) working sets holds at most `cap`
-    * cache entries instead of growing without bound. Plan building
-    * happens OUTSIDE the lock (analysis + file listing can take
-    * seconds on remote storage); a lost race costs one redundant
-    * plan build, first-put wins. */
-  // sized for TWO concurrent sfDirs' full working sets (16 keys each —
-  // r21 adds the shared quality-score frame `qscore|<sfDir>` and the
-  // basket-pair fan `itemsets-pairs|<sfDir>`:
-  // sigs, bench shingles, tfidf-tf, unigram-tf, hh summary, the
-  // embeddings corpus, the fused ANN index, the Lloyd-quantizer cell
-  // frame, ranked LSH/IVF/IVF-km/fused lists, and the recall truth
-  // list) — below that, every access would evict a still-hot
-  // corpus-scale entry and silently recompute it per query.
-  // MemoPolicySpec pins the eviction/unpersist contract against this
-  // cap.
-  private[engine] val sigSetMemoCap = 36
-  private val sigSetMemo =
-    scala.collection.mutable.LinkedHashMap.empty[(SparkSession, String),
-      DataFrame]
-  /** Memoize-and-persist a derived working set, keyed by session +
-    * string key — LRU-bounded, unpersist-on-eviction, re-persisting
-    * after an external `clearCache`. Shared by the minhash signature
-    * sets and the benchmark shingle set. */
-  /** `eager = true` (default) materializes the cache with one count
-    * job at build/re-persist time: a lazy persist whose first
-    * consumers are SIBLING AQE stages (both exchanges of a self-join,
-    * the per-iteration edge scans of an unrolled fixpoint) races —
-    * every sibling runs the full build concurrently ("Block already
-    * exists" churn), multiplying the heaviest pass (measured: the
-    * memo-consumer paired subset ran 0.94× geomean with eager on).
-    * Pass `eager = false` for memos consumed exactly once downstream
-    * (the ANN ranked-list chain) — there the count is a pure extra
-    * job per bench sample (q_ann_recall's 6-memo chain measured
-    * ~1.2× with a blanket eager). */
-  /** `compactRows >= 0` repartitions the CACHED frame to the
-    * row-derived partition target (the [[cachedSigSets]] sizing rule,
-    * [[Tables.spreadTarget]]) before persisting: cached plans keep
-    * their physical partitioning (AQE may not re-layout them —
-    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
-    * defaults false), so a small working set built under
-    * shuffle.partitions=32 pins EVERY consumer stage to 32 near-empty
-    * tasks at ~20-80 ms fixed setup each (StageProbe r22: the bm25/
-    * rfm memos cost their consumers 15-20 s of summed task time in
-    * pure per-task setup). Only fires when the target is BELOW the
-    * core count — corpus-scale caches keep their build partitioning. */
-  private[engine] def memoizedPersisted(spark: SparkSession, keyStr: String,
-      eager: Boolean = false, compactRows: Long = -1L)(
-      build: => DataFrame): DataFrame = {
-    val key = (spark, keyStr)
-    // Persist (a driver-side CacheManager registration, cheap) happens
-    // INSIDE the lock: persisting after release would race an LRU
-    // eviction of the just-inserted entry — the evictor's unpersist
-    // would no-op on the not-yet-persisted df, then the late persist
-    // would register an orphaned cache entry the memo no longer
-    // tracks (exactly the leak this memo exists to prevent).
-    def touchAndPersist(k: (SparkSession, String)): Option[(DataFrame, Boolean)] =
-      // LinkedHashMap keeps INSERTION order — re-insert on access so
-      // the head is always the least-recently-used entry. The Boolean
-      // reports whether this access RE-persisted a dropped cache (an
-      // external clearCache) — the caller materializes it outside the
-      // lock, for the same racing-consumers reason as the first build.
-      sigSetMemo.remove(k).map { v =>
-        sigSetMemo.put(k, v)
-        val repersist =
-          v.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-        if (repersist)
-          v.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (v, repersist)
-      }
-    val existing = sigSetMemo.synchronized {
-      sigSetMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      touchAndPersist(key)
-    }
-    existing.map { case (v, repersisted) =>
-      if (repersisted && eager) recordCount(key, v.count())
-      v
-    }.getOrElse {
-      // plan building stays OUTSIDE the lock (analysis + file listing
-      // can take seconds); a lost race costs one redundant build
-      val built = {
-        val b = build
-        val p = spark.sparkContext.defaultParallelism
-        val target = Tables.spreadTarget(p, compactRows, 512)
-        if (compactRows >= 0 && target < p) b.repartition(target) else b
-      }
-      val winner = sigSetMemo.synchronized {
-        val w = touchAndPersist(key).map(_._1).getOrElse {
-          sigSetMemo.put(key, built)
-          built.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          built
-        }
-        while (sigSetMemo.size > sigSetMemoCap) {
-          val (ek, ev) = sigSetMemo.head
-          sigSetMemo.remove(ek)
-          if (!ek._1.sparkContext.isStopped) ev.unpersist()
-        }
-        w
-      }
-      // Materialize the fresh cache EAGERLY (outside the lock): a lazy
-      // persist whose first two consumers are sibling AQE shuffle
-      // stages (e.g. both exchanges of the LSH band self-join) races —
-      // BOTH stages run the full tokenize+minhash build concurrently
-      // ("Block already exists" churn), doubling the heaviest pass.
-      // One count materializes every partition once; consumers then
-      // read the cache. Cost: one extra job over the (already planned)
-      // working set — measured a net win on every multi-consumer memo
-      // (the band join's double compute gone). Correctness-neutral:
-      // same plan, same inputs, still recomputed from parquet after
-      // every clearCache.
-      if ((winner eq built) && eager) recordCount(key, winner.count())
-      winner
-    }
-  }
-
-  /** Row counts observed by the memo's eager materialization jobs —
-    * a SIZING side channel, not a result cache: consumers use it to
-    * derive partition-count targets (the [[Tables.spreadTarget]]
-    * rule) without re-running a count job over data the eager count
-    * just scanned. The value is a pure function of the memo key's
-    * inputs (same build plan, same parquet), so reusing it across a
-    * re-persist cannot diverge; clearMemos drops it with the frame. */
-  private val memoCountMemo =
-    scala.collection.mutable.LinkedHashMap.empty[(SparkSession, String), Long]
-  private def recordCount(key: (SparkSession, String), n: Long): Unit =
-    memoCountMemo.synchronized {
-      memoCountMemo.put(key, n)
-      while (memoCountMemo.size > sigSetMemoCap * 2)
-        memoCountMemo.remove(memoCountMemo.head._1)
-    }
-  /** The recorded eager-count for a memo key, else the (cheap,
-    * cache-backed) count job. */
-  private[engine] def memoizedRowCount(spark: SparkSession,
-      keyStr: String, df: DataFrame): Long =
-    memoCountMemo.synchronized {
-      memoCountMemo.get((spark, keyStr))
-    }.getOrElse {
-      val n = df.count()
-      recordCount((spark, keyStr), n)
-      n
-    }
-
-  /** Drop and unpersist every memoized working set belonging to
-    * `spark` — the cold-measurement reset. `clearCache()` alone
-    * unpersists the frames but the memo keeps returning the SAME
-    * now-uncached DataFrames, which are only re-persisted on their
-    * next memo ACCESS — a query that reaches a shared subtree through
-    * a non-memo path re-executes it once per consumer, overstating
-    * cold cost vs a genuine first run (ADVICE r10). Tools measuring
-    * cold paths call this (plus [[Similarity.clearMemos]] /
-    * [[Tables.clearMemos]]) instead. */
-  private[graft] def clearMemos(spark: SparkSession): Unit = {
-    sigSetMemo.synchronized {
-      val keys = sigSetMemo.keys.filter(_._1 eq spark).toList
-      keys.foreach { k =>
-        sigSetMemo.remove(k).foreach { v =>
-          if (!spark.sparkContext.isStopped) v.unpersist(true)
-        }
-      }
-    }
-    memoCountMemo.synchronized {
-      memoCountMemo.filterInPlace((k, _) => k._1 ne spark)
-    }
-  }
+  /** Kept for callers outside the engine; [[SessionMemo.clear]] is the
+    * cold-measurement reset. */
+  private[graft] def clearMemos(spark: SparkSession): Unit =
+    SessionMemo.clear(spark)
 
   private def cachedSigSets(spark: SparkSession, sfDir: String,
       n: Int, k: Int): DataFrame =
-    memoizedPersisted(spark, s"sigs|$sfDir|$n|$k", eager = true) {
+    SessionMemo.frames(spark, s"sigs|$sfDir|$n|$k", eager = true) {
       val built = shingleSigSets(Tables(spark, sfDir, "documents"), n, k)
       // Compact the CACHED frame to a row-derived partition count (the
       // Tables.spreadTarget sizing rule): the tokenize+minhash build
@@ -564,7 +392,7 @@ object Dedup {
       .filter(col("rn") <= col("n") - ceil(lit(t) * col("n")) + 1)
       .select(col("doc_id"), col("shingle"))
     val prefix = memoKey.map(k =>
-      memoizedPersisted(spark, k, eager = true)(prefix0)).getOrElse(prefix0)
+      SessionMemo.frames(spark, k, eager = true)(prefix0)).getOrElse(prefix0)
     val cands = prefix.as("a")
       .join(prefix.as("b"),
         col("a.shingle") === col("b.shingle")
@@ -1341,7 +1169,7 @@ object Dedup {
     * `q_unigram_score` pattern), never a collect. */
   def qPagerank(spark: SparkSession, sfDir: String): DataFrame = {
     val pairs = minhashPairs(spark, sfDir).select(col("ida"), col("idb"))
-    val e0 = memoizedPersisted(spark, s"pr-edges|$sfDir")(
+    val e0 = SessionMemo.frames(spark, s"pr-edges|$sfDir")(
       pairs.select(col("ida").as("src"), col("idb").as("dst"))
         .unionByName(pairs.select(col("idb").as("src"), col("ida").as("dst"))))
     // fan-out follows edge volume, not cluster width (the
@@ -1352,14 +1180,14 @@ object Dedup {
     // 1M-edge graph still fans to every core
     val e = e0.coalesce(math.max(1, Tables.spreadTarget(
       spark.sparkContext.defaultParallelism,
-      memoizedRowCount(spark, s"pr-edges|$sfDir", e0), 512)))
+      SessionMemo.frames.rows(spark, s"pr-edges|$sfDir", e0), 512)))
     // deg and the node base are ITERATION-INVARIANT — persisted, or
     // every iteration re-plans their aggregates over e (measured: the
     // un-persisted form spent ~2× the query's own work re-running the
     // deg/count aggs and their exchanges three times each). deg rides
     // PRE-JOINED onto the edge list (also invariant), cutting each
     // iteration from two joins to one (r14: one fewer exchange/iter)
-    val edeg = memoizedPersisted(spark, s"pr-edeg|$sfDir")(
+    val edeg = SessionMemo.frames(spark, s"pr-edeg|$sfDir")(
       e.join(e.groupBy(col("src")).agg(count(lit(1)).as("deg")),
         Seq("src")))
     // r0 = S div n, carried per node so each iteration's teleport term
@@ -1369,7 +1197,7 @@ object Dedup {
     // loser here recomputes a node-sized frame from the already-
     // materialized edge cache, which is cheaper than an extra job
     // over the distinct+crossJoin build.
-    val nodesBase = memoizedPersisted(spark, s"pr-nodes|$sfDir")({
+    val nodesBase = SessionMemo.frames(spark, s"pr-nodes|$sfDir")({
       val nodes = e.select(col("dst").as("node")).distinct()
       nodes.crossJoin(broadcast(nodes.agg(count(lit(1)).as("n"))))
         .select(col("node"), expr(s"$pagerankScale div n").as("r0"))
@@ -1443,7 +1271,7 @@ object Dedup {
     * order holds ([[graft.tools.GraphScale]] measures the split).
     * Hot mid-nodes in the wedge join are AQE skew-split. */
   def qTriangles(spark: SparkSession, sfDir: String): DataFrame = {
-    val e0 = memoizedPersisted(spark, s"pr-edges-canon|$sfDir", eager = true)(
+    val e0 = SessionMemo.frames(spark, s"pr-edges-canon|$sfDir", eager = true)(
       minhashPairs(spark, sfDir).select(col("ida"), col("idb")))
     // fan-out follows edge volume (the qPagerank coalesce rule): the
     // cached pairs frame keeps the verify join's full partitioning, so
@@ -1454,7 +1282,7 @@ object Dedup {
     // set still fans to every core.
     val e = e0.coalesce(math.max(1, Tables.spreadTarget(
       spark.sparkContext.defaultParallelism,
-      memoizedRowCount(spark, s"pr-edges-canon|$sfDir", e0), 512)))
+      SessionMemo.frames.rows(spark, s"pr-edges-canon|$sfDir", e0), 512)))
     triangleCountsDeg(e).orderBy(col("doc_id"))
   }
 
@@ -1490,10 +1318,10 @@ object Dedup {
     * is pairs-sized and shared (same persist key) with PageRank. */
   def qBfsHops(spark: SparkSession, sfDir: String): DataFrame = {
     val pairs = minhashPairs(spark, sfDir).select(col("ida"), col("idb"))
-    val e = memoizedPersisted(spark, s"pr-edges|$sfDir")(
+    val e = SessionMemo.frames(spark, s"pr-edges|$sfDir")(
       pairs.select(col("ida").as("src"), col("idb").as("dst"))
         .unionByName(pairs.select(col("idb").as("src"), col("ida").as("dst"))))
-    val seeds = memoizedPersisted(spark, s"bfs-seeds|$sfDir")(
+    val seeds = SessionMemo.frames(spark, s"bfs-seeds|$sfDir")(
       e.select(col("src").as("node")).distinct()
         .filter(col("node") % bfsSeedMod === 0)
         .withColumn("dist", lit(0L)))
@@ -1522,7 +1350,7 @@ object Dedup {
         .agg((min(col("dist")) + 1).as("dist"))
         .join(visited.select(col("node")), Seq("node"), "left_anti")
       val newly = memoKey match {
-        case Some(k) => memoizedPersisted(e.sparkSession, s"$k-v$h")(step)
+        case Some(k) => SessionMemo.frames(e.sparkSession, s"$k-v$h")(step)
         case None => step
       }
       visited = visited.unionByName(newly)
@@ -1701,7 +1529,7 @@ object Dedup {
     // cached layout compacts to the row-derived target (documents
     // over-estimates the pair count; the guard only ever compacts
     // below the core count).
-    memoizedPersisted(spark, minhashPairsKey(sfDir),
+    SessionMemo.frames(spark, minhashPairsKey(sfDir),
       eager = true,
       compactRows = Tables.memoizedCount(spark, sfDir, "documents"))(
       minhashPairsOf(cachedSigSets(spark, sfDir, n = 3, k = 64)))
@@ -1958,7 +1786,8 @@ object Dedup {
     val pairs = minhashPairs(spark, sfDir).select(col("ida"), col("idb"))
     labelComponents(pairs, driverEdgeLimit,
       knownCountUpper = if (driverEdgeLimit < 0L) None
-        else Some(memoizedRowCount(spark, minhashPairsKey(sfDir), pairs)))
+        else Some(SessionMemo.frames.rows(spark, minhashPairsKey(sfDir),
+          pairs)))
       .select(col("id").as("doc_id"), col("label").as("cluster_id"))
       .orderBy(col("doc_id"))
   }
@@ -1998,7 +1827,7 @@ object Dedup {
     // stored slice is <= all pairs; the merged input is <= label rows
     // (vertices <= 2|pairs|) + arriving (<= |pairs|) — coarse, but the
     // bound only picks the hybrid branch (exact labels either way)
-    val nPairs = memoizedRowCount(spark, minhashPairsKey(sfDir), pairs)
+    val nPairs = SessionMemo.frames.rows(spark, minhashPairsKey(sfDir), pairs)
     val bucket = Tables.md5Bucket(col("ida"))
     val stored = labelComponents(pairs.filter(bucket < 90), 1000000L,
         knownCountUpper = Some(nPairs))
@@ -2107,7 +1936,7 @@ object Dedup {
     * that paid per-row ser/deser on the corpus-sized probe side.) */
   def qContaminationBloom(spark: SparkSession, sfDir: String): DataFrame = {
     val d = Tables(spark, sfDir, "documents")
-    val bench = memoizedPersisted(spark, s"benchShingles|$sfDir", eager = true)(
+    val bench = SessionMemo.frames(spark, s"benchShingles|$sfDir", eager = true)(
       shingleHashSets(d.filter(col("doc_id") < 10))
         .select(explode(col("sh")).as("shingle")).distinct())
     // size the sketch from the actual set (the count also materializes
@@ -2149,7 +1978,7 @@ object Dedup {
     val batchSource = "src0"
     // the batch participates three times (sketch sizing, sketch
     // build, anti-join) — memoized like the other shared working sets
-    val batch = memoizedPersisted(spark, s"incrBatch|$sfDir", eager = true)(
+    val batch = SessionMemo.frames(spark, s"incrBatch|$sfDir", eager = true)(
       d.filter(col("source") === batchSource)
         .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp")))
     val history = d.filter(col("source") =!= batchSource)

@@ -617,7 +617,7 @@ object Multimodal {
   // query share one codec-round-trip pass per session — the encode +
   // decode walk is the expensive per-row work in this family
   private def phashFrame(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.memoizedPersisted(spark, s"phash|$sfDir", eager = true) {
+    SessionMemo.frames(spark, s"phash|$sfDir", eager = true) {
       import spark.implicits._
       mediaFromDocuments(spark, sfDir).as[MediaRecord]
         .filter(_.media_type == "image")
@@ -686,7 +686,7 @@ object Multimodal {
 
   // memoized for the same hash-dump/pairs sharing as [[phashFrame]]
   private def afpFrame(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.memoizedPersisted(spark, s"afp|$sfDir", eager = true) {
+    SessionMemo.frames(spark, s"afp|$sfDir", eager = true) {
       import spark.implicits._
       mediaFromDocuments(spark, sfDir).as[MediaRecord]
         .filter(_.media_type == "audio")

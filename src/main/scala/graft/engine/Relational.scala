@@ -2195,7 +2195,7 @@ object Relational {
   def qRfmSharded(spark: SparkSession, sfDir: String): DataFrame = {
     val c = Tables(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_nationkey"))
-    val per = Dedup.memoizedPersisted(spark, s"rfmper|$sfDir", eager = true,
+    val per = SessionMemo.frames(spark, s"rfmper|$sfDir", eager = true,
       compactRows = Tables.memoizedCount(spark, sfDir, "customer"))(
       Tables(spark, sfDir, "orders")
         .groupBy(col("o_custkey"))
@@ -2505,7 +2505,7 @@ object Relational {
     // and the per-basket edge regroup) and exchange reuse only shares
     // the upstream basket exchange, so the collect_set + explode
     // subtree re-ran per consumer (measured in the stage table).
-    val pairs = Dedup.memoizedPersisted(spark, s"itemsets-pairs|$sfDir",
+    val pairs = SessionMemo.frames(spark, s"itemsets-pairs|$sfDir",
         eager = true)({
       // imperative per-partition fan (the shingleHashSets discipline):
       // the nested-transform HOF form is interpreted — the fan's two
@@ -2759,7 +2759,7 @@ object Relational {
     * degrades to the constant shard instead of NPE'ing (r16
     * advisory). */
   def qGiniConcentration(spark: SparkSession, sfDir: String): DataFrame = {
-    val s = Dedup.memoizedPersisted(spark, s"gini-users|$sfDir")(
+    val s = SessionMemo.frames(spark, s"gini-users|$sfDir")(
       Tables(spark, sfDir, "events")
         .groupBy(col("user_id"))
         .agg(sum(round(col("value") * 1000).cast("long")).as("s")))

@@ -25,55 +25,24 @@ object Scale {
     * the shard count and the value expression's string form, folded
     * in here rather than left to call-site discipline — a future
     * caller reusing a key with a different shards/value argument must
-    * miss, not silently receive the other call's cuts (r18 ADVICE);
-    * same lifecycle discipline as the other driver memos
-    * (stopped-session sweep, LRU cap). */
-  private val cutsMemo = scala.collection.mutable.LinkedHashMap
-    .empty[(org.apache.spark.sql.SparkSession, String), Column]
-  private val cutsMemoCap = 64
+    * miss, not silently receive the other call's cuts (r18 ADVICE). */
+  private[engine] val cutsMemo =
+    new SessionMemo.Values[String, Column](cap = 64)
   def memoizedShards(spark: org.apache.spark.sql.SparkSession,
-      key: String, shards: Int, value: Column)(build: => Column): Column = {
-    val k = (spark, s"$key|shards=$shards|v=${value.toString}")
-    val hit = cutsMemo.synchronized {
-      cutsMemo.filterInPlace((kk, _) => !kk._1.sparkContext.isStopped)
-      cutsMemo.remove(k).map { v => cutsMemo.put(k, v); v }
-    }
-    hit.getOrElse {
-      val c = build
-      cutsMemo.synchronized {
-        cutsMemo.put(k, c)
-        while (cutsMemo.size > cutsMemoCap)
-          cutsMemo.remove(cutsMemo.head._1)
-      }
-      c
-    }
-  }
+      key: String, shards: Int, value: Column)(build: => Column): Column =
+    cutsMemo(spark, s"$key|shards=$shards|v=${value.toString}")(build)
 
   /** [[memoizedShards]] for the FUSED multi-axis derivation
-    * ([[balancedCutsMulti]]): same LRU/lifecycle discipline, values
-    * are the per-axis cut VALUE lists (plain data, so callers can
-    * rebuild shard expressions over any column). */
-  private val cutValsMemo = scala.collection.mutable.LinkedHashMap
-    .empty[(org.apache.spark.sql.SparkSession, String), Seq[Seq[Long]]]
+    * ([[balancedCutsMulti]]): values are the per-axis cut VALUE lists
+    * (plain data, so callers can rebuild shard expressions over any
+    * column). */
+  private[engine] val cutValsMemo =
+    new SessionMemo.Values[String, Seq[Seq[Long]]](cap = 64)
   def memoizedCutsMulti(spark: org.apache.spark.sql.SparkSession,
       key: String, shards: Int, values: Seq[Column])(
-      build: => Seq[Seq[Long]]): Seq[Seq[Long]] = {
-    val k = (spark,
-      s"$key|shards=$shards|v=${values.map(_.toString).mkString(";")}")
-    val hit = cutValsMemo.synchronized {
-      cutValsMemo.filterInPlace((kk, _) => !kk._1.sparkContext.isStopped)
-      cutValsMemo.remove(k).map { v => cutValsMemo.put(k, v); v }
-    }
-    hit.getOrElse {
-      val c = build
-      cutValsMemo.synchronized {
-        cutValsMemo.put(k, c)
-        while (cutValsMemo.size > cutsMemoCap)
-          cutValsMemo.remove(cutValsMemo.head._1)
-      }
-      c
-    }
-  }
+      build: => Seq[Seq[Long]]): Seq[Seq[Long]] =
+    cutValsMemo(spark,
+      s"$key|shards=$shards|v=${values.map(_.toString).mkString(";")}")(build)
 
   /** Codegen'd probe of a driver-built Bloom sketch — Spark's own
     * `BloomFilterMightContain` expression (the runtime bloom-join

@@ -56,7 +56,7 @@ object Similarity {
     * cast + spread, and a cold `q_ann_recall` was paying it THREE
     * times (LSH index, IVF index, exact truth) before the memo. */
   private def corpus(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.memoizedPersisted(spark, s"corpus|$sfDir")(
+    SessionMemo.frames(spark, s"corpus|$sfDir")(
       corpusPlan(spark, sfDir))
 
   /** The un-persisted corpus scan plan — shared by the [[corpus]]
@@ -242,9 +242,8 @@ object Similarity {
     * index build twice in overlapping jobs (measured, r10). 25 KB at
     * 50×64 doubles — same lifecycle discipline as the other driver
     * memos. */
-  private val queryVecMemo = scala.collection.mutable.LinkedHashMap
-    .empty[(SparkSession, String), Seq[(Long, Seq[Double])]]
-  private val queryVecMemoCap = 8
+  private[engine] val queryVecMemo =
+    new SessionMemo.Values[String, Seq[(Long, Seq[Double])]](cap = 8)
   private def queryVecs(spark: SparkSession, sfDir: String,
       maxQid: Long): DataFrame = {
     // Keyed by the RESOLVED file set (as Tables.spread keys its
@@ -254,20 +253,9 @@ object Similarity {
     // must MISS here or query batches silently diverge from the
     // corpus the other operators scan.
     val files = corpusPlan(spark, sfDir).inputFiles.sorted.mkString("\n")
-    val key = (spark, s"$files|$maxQid")
-    val hit = queryVecMemo.synchronized {
-      queryVecMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      queryVecMemo.remove(key).map { v => queryVecMemo.put(key, v); v }
-    }
-    val rows = hit.getOrElse {
-      val r = corpusPlan(spark, sfDir).filter(col("vec_id") < maxQid)
+    val rows = queryVecMemo(spark, s"$files|$maxQid") {
+      corpusPlan(spark, sfDir).filter(col("vec_id") < maxQid)
         .collect().toSeq.map(x => (x.getLong(0), x.getSeq[Double](1)))
-      queryVecMemo.synchronized {
-        queryVecMemo.put(key, r)
-        while (queryVecMemo.size > queryVecMemoCap)
-          queryVecMemo.remove(queryVecMemo.head._1)
-      }
-      r
     }
     import spark.implicits._
     rows.toDF("vec_id", "v")
@@ -294,7 +282,7 @@ object Similarity {
     // the (maxQid, k) audit window, so both parameters ride in the
     // memo key: a future caller with a different window must miss,
     // not be served a stale list
-    val truth = Dedup.memoizedPersisted(spark,
+    val truth = SessionMemo.frames(spark,
       s"truthlist|$sfDir|q$recallMaxQid|k$recallK")(
       exactTopK(annCorpus(spark, sfDir),
         queryVecs(spark, sfDir, recallMaxQid), k = recallK)
@@ -545,11 +533,9 @@ object Similarity {
   /** Driver-side memo for the IVF coarse quantizer — the centroid
     * collect is a Spark job per call otherwise (every probe, every
     * Bench rep); it is a pure function of the corpus, so one fetch
-    * per (session, sfDir) suffices. Same lifecycle discipline as
-    * `Tables.spreadMemo`: stopped sessions pruned, LRU-bounded. */
-  private val ivfCentMemo = scala.collection.mutable.LinkedHashMap
-    .empty[(SparkSession, String), Array[(Long, IndexedSeq[Double])]]
-  private val ivfCentMemoCap = 8
+    * per (session, sfDir) suffices. */
+  private[engine] val ivfCentMemo =
+    new SessionMemo.Values[String, Array[(Long, IndexedSeq[Double])]](cap = 8)
 
   /** IVF cell count for an n-vector corpus: ⌈√n⌉, floor 16, UNCAPPED —
     * probing nprobe cells then costs O(nprobe·n/√n) = O(nprobe·√n)
@@ -631,22 +617,11 @@ object Similarity {
     * per (session, sfDir). */
   private def ivfCentroids(spark: SparkSession, sfDir: String,
       e: DataFrame, k: Int): IndexedSeq[(Long, IndexedSeq[Double])] = {
-    val key = (spark, sfDir)
-    val hit = ivfCentMemo.synchronized {
-      ivfCentMemo.filterInPlace((kk, _) => !kk._1.sparkContext.isStopped)
-      ivfCentMemo.remove(key).map { v => ivfCentMemo.put(key, v); v }
-    }
-    hit.getOrElse {
-      val c = e.filter(col("vec_id") < k)
+    ivfCentMemo(spark, sfDir) {
+      e.filter(col("vec_id") < k)
         .select(col("vec_id"), col("v")).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq))
         .sortBy(_._1)
-      ivfCentMemo.synchronized {
-        ivfCentMemo.put(key, c)
-        while (ivfCentMemo.size > ivfCentMemoCap)
-          ivfCentMemo.remove(ivfCentMemo.head._1)
-      }
-      c
     }.toIndexedSeq
   }
 
@@ -735,7 +710,7 @@ object Similarity {
       x => round(x * kmeansQuantUnit)))
     // the Lloyd quantizer's cells differ from the fused index's
     // first-k cells, so this path memoizes its OWN assignment frame
-    val assigned = Dedup.memoizedPersisted(spark, s"ivfassignedkm|$sfDir")(
+    val assigned = SessionMemo.frames(spark, s"ivfassignedkm|$sfDir")(
       e.select(col("vec_id"), col("v"),
         ivfCellCol(cent, v = vecQ).as("cid")))
     annIvfRank(spark, sfDir, e, assigned, cent, forceLit = false,
@@ -774,7 +749,7 @@ object Similarity {
     // qAnnRecall ran the probe+rank pipeline twice per index
     val ranked = topkRank(cand)
     memoSuffix.fold(ranked)(sfx =>
-      Dedup.memoizedPersisted(spark, s"ivflist$sfx")(ranked))
+      SessionMemo.frames(spark, s"ivflist$sfx")(ranked))
   }
 
   /** The fused one-pass ANN index: every corpus vector with its
@@ -791,7 +766,7 @@ object Similarity {
     * are pipelined maps, never persisted), and probe scans read n
     * rows instead of 8n. */
   private def annIndex(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.memoizedPersisted(spark, s"annindex|$sfDir") {
+    SessionMemo.frames(spark, s"annindex|$sfDir") {
       val (cent, bits) = annIndexParams(spark, sfDir)
       corpusPlan(spark, sfDir).select(indexProjection(cent, bits): _*)
     }
@@ -979,7 +954,7 @@ object Similarity {
     // is the PUBLIC query's concern ([[qAnnLsh]])
     val ranked = topkRank(cand)
     if (forceLit) ranked
-    else Dedup.memoizedPersisted(spark, s"lshlist|$sfDir")(ranked)
+    else SessionMemo.frames(spark, s"lshlist|$sfDir")(ranked)
   }
 
   /** Shared similarity ranking tail: per-query top-k of the scored
@@ -1028,7 +1003,7 @@ object Similarity {
     * re-consumes it, and before the memo every audit run re-ran the
     * RRF agg+window on top of the memoized inputs). */
   private def fusedList(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.memoizedPersisted(spark, s"fusedlist|$sfDir") {
+    SessionMemo.frames(spark, s"fusedlist|$sfDir") {
       val lsh = lshList(spark, sfDir)
         .select(col("qid"), col("nid"), col("rank"))
       val ivf = ivfList(spark, sfDir)
@@ -1152,49 +1127,19 @@ object Similarity {
     * once offline and serves many assignments (the exact posture the
     * IVF quantizer memo already takes). One fit per
     * (session, sfDir, k, iters); values are k×dim doubles — tiny.
-    * Same lifecycle discipline as the other driver memos. */
-  private val kmeansCentMemo = scala.collection.mutable.LinkedHashMap
-    .empty[(SparkSession, String), IndexedSeq[IndexedSeq[Double]]]
-  private val kmeansCentMemoCap = 8
+    * Shared with the quantized fit ([[kmeansCentroidsQuantCached]]). */
+  private[engine] val kmeansCentMemo =
+    new SessionMemo.Values[String, IndexedSeq[IndexedSeq[Double]]](cap = 8)
   private def kmeansCentroidsCached(spark: SparkSession, sfDir: String,
       k: Int, iters: Int, e: DataFrame,
-      n: Long): IndexedSeq[IndexedSeq[Double]] = {
-    val key = (spark, s"$sfDir|$k|$iters")
-    val hit = kmeansCentMemo.synchronized {
-      kmeansCentMemo.filterInPlace((kk, _) => !kk._1.sparkContext.isStopped)
-      kmeansCentMemo.remove(key).map { v => kmeansCentMemo.put(key, v); v }
-    }
-    hit.getOrElse {
-      val c = kmeansCentroidsFrom(kmeansFitSample(e, k, n), k, iters)
-      kmeansCentMemo.synchronized {
-        kmeansCentMemo.put(key, c)
-        while (kmeansCentMemo.size > kmeansCentMemoCap)
-          kmeansCentMemo.remove(kmeansCentMemo.head._1)
-      }
-      c
-    }
-  }
+      n: Long): IndexedSeq[IndexedSeq[Double]] =
+    kmeansCentMemo(spark, s"$sfDir|$k|$iters")(
+      kmeansCentroidsFrom(kmeansFitSample(e, k, n), k, iters))
 
-  /** Drop every driver-side memo belonging to `spark` (query
-    * batches, IVF/k-means centroids) — the cold-measurement reset,
-    * paired with [[Dedup.clearMemos]]. These hold collected VALUES,
-    * not DataFrames, so `clearCache()` never touches them and a
-    * "cold" rep would otherwise skip the centroid fit / query
-    * collect a real first run pays. */
-  private[graft] def clearMemos(spark: SparkSession): Unit = {
-    queryVecMemo.synchronized {
-      queryVecMemo.filterInPlace((k, _) => k._1 ne spark)
-    }
-    ivfCentMemo.synchronized {
-      ivfCentMemo.filterInPlace((k, _) => k._1 ne spark)
-    }
-    kmeansCentMemo.synchronized {
-      kmeansCentMemo.filterInPlace((k, _) => k._1 ne spark)
-    }
-    pqBooksMemo.synchronized {
-      pqBooksMemo.filterInPlace((k, _) => k._1 ne spark)
-    }
-  }
+  /** Kept for callers outside the engine; [[SessionMemo.clear]] is the
+    * cold-measurement reset. */
+  private[graft] def clearMemos(spark: SparkSession): Unit =
+    SessionMemo.clear(spark)
 
   /** [[kmeansCentroids]] over an arbitrary (vec_id, v) corpus — the
     * seam the scale harness ([[graft.tools.SemScale]]) drives with
@@ -1255,7 +1200,7 @@ object Similarity {
     * it fully codegen'd. At 100 TB the lattice copy would be written
     * at ingest instead. */
   private def corpusQ(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.memoizedPersisted(spark, s"corpusq|$sfDir")(
+    SessionMemo.frames(spark, s"corpusq|$sfDir")(
       corpusPlan(spark, sfDir).select(col("vec_id"),
         transform(col("v"), x => round(x * kmeansQuantUnit)).as("v")))
 
@@ -1331,22 +1276,11 @@ object Similarity {
     * the regime so a violation fails loudly instead of hash-diffing. */
   private def kmeansCentroidsQuantCached(spark: SparkSession,
       sfDir: String, k: Int, iters: Int): IndexedSeq[IndexedSeq[Double]] = {
-    val key = (spark, s"quant|$sfDir|$k|$iters")
-    val hit = kmeansCentMemo.synchronized {
-      kmeansCentMemo.filterInPlace((kk, _) => !kk._1.sparkContext.isStopped)
-      kmeansCentMemo.remove(key).map { v => kmeansCentMemo.put(key, v); v }
-    }
-    hit.getOrElse {
+    kmeansCentMemo(spark, s"quant|$sfDir|$k|$iters") {
       val e = corpusQ(spark, sfDir)
       val n = corpusCount(spark, sfDir)
       requireQuantOracleRegime(n, k, "kmeansCentroidsQuantCached")
-      val c = kmeansCentroidsQuantFrom(kmeansFitSample(e, k, n), k, iters)
-      kmeansCentMemo.synchronized {
-        kmeansCentMemo.put(key, c)
-        while (kmeansCentMemo.size > kmeansCentMemoCap)
-          kmeansCentMemo.remove(kmeansCentMemo.head._1)
-      }
-      c
+      kmeansCentroidsQuantFrom(kmeansFitSample(e, k, n), k, iters)
     }
   }
 
@@ -1727,27 +1661,15 @@ object Similarity {
     * [[kmeansCentMemo]] lifecycle. Values are m·ks·subdim doubles
     * (8 KB). Fits on the QUANTIZED corpus since r17 (the
     * oracle-backed lattice). */
-  private val pqBooksMemo = scala.collection.mutable.LinkedHashMap
-    .empty[(SparkSession, String), IndexedSeq[IndexedSeq[IndexedSeq[Double]]]]
-  private val pqBooksMemoCap = 8
+  private[engine] val pqBooksMemo = new SessionMemo.Values[
+    String, IndexedSeq[IndexedSeq[IndexedSeq[Double]]]](cap = 8)
   private[graft] def pqCodebooks(spark: SparkSession, sfDir: String)
       : IndexedSeq[IndexedSeq[IndexedSeq[Double]]] = {
-    val key = (spark, sfDir)
-    val hit = pqBooksMemo.synchronized {
-      pqBooksMemo.filterInPlace((kk, _) => !kk._1.sparkContext.isStopped)
-      pqBooksMemo.remove(key).map { v => pqBooksMemo.put(key, v); v }
-    }
-    hit.getOrElse {
+    pqBooksMemo(spark, sfDir) {
       val n = corpusCount(spark, sfDir)
       requireQuantOracleRegime(n, pqCodebookSize, "pqCodebooks")
-      val c = pqCodebooksQuantFrom(
+      pqCodebooksQuantFrom(
         kmeansFitSample(corpusQ(spark, sfDir), pqCodebookSize, n), iters = 3)
-      pqBooksMemo.synchronized {
-        pqBooksMemo.put(key, c)
-        while (pqBooksMemo.size > pqBooksMemoCap)
-          pqBooksMemo.remove(pqBooksMemo.head._1)
-      }
-      c
     }
   }
 
@@ -1793,7 +1715,7 @@ object Similarity {
     * [[graft.tools.AnnScale]]). Rides the fused index's one corpus
     * scan; memoized like the index itself. */
   private def pqIndex(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.memoizedPersisted(spark, s"pqindex|$sfDir") {
+    SessionMemo.frames(spark, s"pqindex|$sfDir") {
       val books = pqCodebooks(spark, sfDir)
       // encode in the codebooks' space — the quantized lattice —
       // derived inline from the fused index's raw vectors (a HOF;

@@ -35,29 +35,13 @@ object Tables {
     * bench pass re-reading footers that cannot change within a
     * session. The cached value is the IMMUTABLE analyzed plan
     * (ts-normalized), not data: every consumer still computes from
-    * the parquet bytes. [[clearMemos]] drops it with the other
+    * the parquet bytes. [[SessionMemo.clear]] drops it with the other
     * cold-measurement memos. */
-  private val tableMemo =
-    scala.collection.mutable.LinkedHashMap.empty[
-      (SparkSession, String, String), DataFrame]
-  private val tableMemoCap = 64
+  private[engine] val tables =
+    new SessionMemo.Values[(String, String), DataFrame](cap = 64)
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val key = (spark, sfDir, name)
-    val hit = tableMemo.synchronized {
-      tableMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      tableMemo.remove(key).map { v => tableMemo.put(key, v); v }
-    }
-    hit.getOrElse {
-      val built = load(spark, sfDir, name)
-      tableMemo.synchronized {
-        tableMemo.put(key, built)
-        while (tableMemo.size > tableMemoCap)
-          tableMemo.remove(tableMemo.head._1)
-      }
-      built
-    }
-  }
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    tables(spark, (sfDir, name))(load(spark, sfDir, name))
 
   private def load(spark: SparkSession, sfDir: String,
       name: String): DataFrame = {
@@ -106,10 +90,8 @@ object Tables {
     * projections layered above them. Plans with no file-based leaves
     * (in-memory test relations) are probed directly — planning a
     * LocalRelation is trivial. */
-  private val spreadMemo =
-    scala.collection.mutable.LinkedHashMap.empty[
-      (SparkSession, String, Int), Int]
-  private val spreadMemoCap = 64
+  private[engine] val spreads =
+    new SessionMemo.Values[(String, Int), Int](cap = 64)
 
   /** Fan-out target: all cores, floored so each task holds at least
     * `minRowsPerTask` rows (when the caller knows the cardinality).
@@ -165,22 +147,7 @@ object Tables {
       spark.sparkContext.defaultParallelism, rows, minRowsPerTask)
     val parts =
       if (files.isEmpty) df.rdd.getNumPartitions
-      else {
-        val key = (spark, fileKey, p)
-        val hit = spreadMemo.synchronized {
-          spreadMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-          spreadMemo.remove(key).map { v => spreadMemo.put(key, v); v }
-        }
-        hit.getOrElse {
-          val n = df.rdd.getNumPartitions
-          spreadMemo.synchronized {
-            spreadMemo.put(key, n)
-            while (spreadMemo.size > spreadMemoCap)
-              spreadMemo.remove(spreadMemo.head._1)
-          }
-          n
-        }
-      }
+      else spreads(spark, (fileKey, p))(df.rdd.getNumPartitions)
     // Hash-partition on a DETERMINISTIC key instead of round-robin
     // repartition(p): every keyless repartition first local-sorts its
     // input (spark.sql.execution.sortBeforeRepartition, on by default
@@ -218,43 +185,16 @@ object Tables {
     * is a pure function of the input files, so one job per
     * (session, dir, table) suffices; values are 8-byte longs, so the
     * LRU bound exists only to drop stopped-session keys. */
-  private val countMemo =
-    scala.collection.mutable.LinkedHashMap.empty[
-      (SparkSession, String, String), Long]
-  private val countMemoCap = 64
+  private[engine] val counts =
+    new SessionMemo.Values[(String, String), Long](cap = 64)
   private[graft] def memoizedCount(spark: SparkSession, sfDir: String,
-      name: String): Long = {
-    val key = (spark, sfDir, name)
-    val hit = countMemo.synchronized {
-      countMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      countMemo.remove(key).map { v => countMemo.put(key, v); v }
-    }
-    hit.getOrElse {
-      val n = apply(spark, sfDir, name).count()
-      countMemo.synchronized {
-        countMemo.put(key, n)
-        while (countMemo.size > countMemoCap)
-          countMemo.remove(countMemo.head._1)
-      }
-      n
-    }
-  }
+      name: String): Long =
+    counts(spark, (sfDir, name))(apply(spark, sfDir, name).count())
 
-  /** Drop the per-session count/spread probes — completes the
-    * cold-measurement reset ([[Dedup.clearMemos]],
-    * [[Similarity.clearMemos]]): a genuine first run pays the count
-    * job and the partition probe too. */
-  private[graft] def clearMemos(spark: SparkSession): Unit = {
-    countMemo.synchronized {
-      countMemo.filterInPlace((k, _) => k._1 ne spark)
-    }
-    spreadMemo.synchronized {
-      spreadMemo.filterInPlace((k, _) => k._1 ne spark)
-    }
-    tableMemo.synchronized {
-      tableMemo.filterInPlace((k, _) => k._1 ne spark)
-    }
-  }
+  /** Kept for callers outside the engine; [[SessionMemo.clear]] is the
+    * cold-measurement reset. */
+  private[graft] def clearMemos(spark: SparkSession): Unit =
+    SessionMemo.clear(spark)
 
   // Keyed per SparkSession (identity), not JVM-global: if the harness
   // stops a session and builds a new one in the same JVM, the new
@@ -282,8 +222,9 @@ object Tables {
     * JVMs serving hundreds of distinct codegen units across a job
     * DAG, and each eviction re-pays a 10-100 ms compile inside task
     * execution; 4096 × ~50 KB of class metadata bounds the metaspace
-    * cost at a few hundred MB. Every graft entry point's builder
-    * sets this (Bench/Verify/Profile/StageProbe/jobs). */
+    * cost at a few hundred MB. The session factory
+    * ([[graft.jobs.Jobs.session]]) sets this for every graft entry
+    * point. */
   val codegenCacheMaxEntries: Int = 4096
 
   /** STATIC-conf companion #2 (r22): `spark.shuffle.sort.
@@ -303,8 +244,7 @@ object Tables {
     * serialized writer is what runs anyway; the bypass path only
     * ever fires on small-reduce-count shuffles where its per-file
     * cost is the documented loss. */
-  val shuffleSortBypassMergeThreshold: Int =
-    sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1").toInt
+  val shuffleSortBypassMergeThreshold: Int = 1
 
   def tune(spark: SparkSession): Unit = synchronized {
     if (!tunedSessions.contains(spark)) {
@@ -340,11 +280,9 @@ object Tables {
       // 147k-group basket agg after AQE coalescing, or corpus-scale
       // aggs) still switch to the spill-safe sort path, which a
       // 3-round factor A/B measured as no worse than the giant hash
-      // map on exactly those aggs (q_copurchase). Env-overridable for
-      // cluster tuning.
+      // map on exactly those aggs (q_copurchase).
       c.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJAGG_FALLBACK",
-          (1 << 16).toString))
+        (1 << 16).toString)
       // events.parquet stores TIMESTAMP(NANOS,false) which the vectorized
       // reader rejects ([PARQUET_TYPE_ILLEGAL]); read as Long and convert.
       c.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -324,7 +324,7 @@ object TextOps {
     * structural. */
   private[engine] def tfFrame(spark: SparkSession,
       sfDir: String): DataFrame =
-    Dedup.memoizedPersisted(spark, s"tfidf-tf|$sfDir", eager = true,
+    SessionMemo.frames(spark, s"tfidf-tf|$sfDir", eager = true,
       compactRows = Tables.memoizedCount(spark, sfDir, "documents"))({
       import spark.implicits._
       Dedup.spread(Tables(spark, sfDir, "documents")
@@ -520,7 +520,7 @@ object TextOps {
     val w = (2L * supportDenom).toInt
     val d = Tables(spark, sfDir, "documents")
     val toks = d.select(explode(tokens(col("text"))).as("term"))
-    val merged = Dedup.memoizedPersisted(spark, s"hhsummary|$sfDir", eager = true)(
+    val merged = SessionMemo.frames(spark, s"hhsummary|$sfDir", eager = true)(
       toks.as[String]
         .mapPartitions { it =>
           var np = 0L
@@ -2054,7 +2054,7 @@ object TextOps {
   def qUnigramScore(spark: SparkSession, sfDir: String): DataFrame = {
     val d = Tables(spark, sfDir, "documents")
     val toks = d.select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-    val tf = Dedup.memoizedPersisted(spark, s"unigram-tf|$sfDir", eager = true)(
+    val tf = SessionMemo.frames(spark, s"unigram-tf|$sfDir", eager = true)(
       toks.groupBy(col("term")).agg(count(lit(1)).as("c")))
     val total = tf.agg(sum(col("c")).as("total"))
     toks.join(tf, Seq("term"))
@@ -2143,7 +2143,7 @@ object TextOps {
     // the exact side is qUnigramScore's memoized term-frequency table
     // (same key): reusing it means a Verify run tokenizes the corpus
     // once for both queries instead of re-aggregating here
-    val tf = Dedup.memoizedPersisted(spark, s"unigram-tf|$sfDir", eager = true)(
+    val tf = SessionMemo.frames(spark, s"unigram-tf|$sfDir", eager = true)(
       toks.groupBy(col("term")).agg(count(lit(1)).as("c")))
     tf.select(col("term"), col("c").as("exact"))
       .orderBy(col("exact").desc, col("term")).limit(30)
@@ -2180,7 +2180,7 @@ object TextOps {
     * the two 1-row totals ride broadcast cross joins. */
   def qImportanceRatio(spark: SparkSession, sfDir: String): DataFrame = {
     val d = Tables(spark, sfDir, "documents")
-    val toks = Dedup.memoizedPersisted(spark, s"imp-toks|$sfDir", eager = true)(
+    val toks = SessionMemo.frames(spark, s"imp-toks|$sfDir", eager = true)(
       d.select(col("doc_id"), col("source"),
         explode(tokens(col("text"))).as("term")))
     val tfRaw = toks.groupBy(col("term")).agg(count(lit(1)).as("cr"))
@@ -2652,7 +2652,7 @@ object TextOps {
     * group scan otherwise tokenizes the whole corpus in ONE task
     * (no-op on a multi-split lake). */
   private def qualityFrame(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.memoizedPersisted(spark, s"qscore|$sfDir", eager = true,
+    SessionMemo.frames(spark, s"qscore|$sfDir", eager = true,
       compactRows = Tables.memoizedCount(spark, sfDir, "documents"))({
       // one imperative per-partition pass (the shingleHashSets
       // discipline): the Column form's interpreted HOFs re-tokenized
@@ -2695,7 +2695,7 @@ object TextOps {
   def qQualityCalibratedSharded(spark: SparkSession,
       sfDir: String): DataFrame = {
     val s = qualityFrame(spark, sfDir)
-    val grp = Dedup.memoizedPersisted(spark, s"qcalgrp|$sfDir", eager = true)(
+    val grp = SessionMemo.frames(spark, s"qcalgrp|$sfDir", eager = true)(
       s.groupBy(col("source"), col("q")).agg(count(lit(1)).as("__cq")))
     val nPer = grp.groupBy(col("source"))
       .agg(sum(col("__cq")).as("__n"))

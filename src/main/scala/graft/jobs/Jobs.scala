@@ -76,10 +76,15 @@ object JobConfig {
 
 /** Shared job scaffolding: session, source, trigger. */
 object Jobs {
-  /** Under spark-submit the master arrives as the `spark.master`
-    * system property; a bare `runMain` (dev/bench) has none, so fall
-    * back to local[SPARK_GRAFT_CPUS] with matching shuffle
-    * parallelism — the Bench/Verify convention. */
+  /** THE session factory: every graft entry point (the jobs, Bench,
+    * Verify, Profile, the tools) builds its session here, so the
+    * static confs below reach all of them. Under spark-submit the
+    * master arrives as the `spark.master` system property; a bare
+    * `runMain` (dev/bench) has none, so fall back to
+    * local[SPARK_GRAFT_CPUS] with matching shuffle parallelism. The
+    * forked-run JVM options (build.sbt) pin the UI off and the session
+    * zone to UTC; [[graft.engine.Tables.tune]] re-pins the zone on
+    * first table access. */
   def session(appName: String, hive: Boolean = false): SparkSession = {
     var b = SparkSession.builder().appName(appName)
       // static conf — see Tables.codegenCacheMaxEntries (long-lived
@@ -95,7 +100,15 @@ object Jobs {
       b = b.master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)
     }
-    (if (hive) b.enableHiveSupport() else b).getOrCreate()
+    val spark = (if (hive) b.enableHiveSupport() else b).getOrCreate()
+    // every unpartitioned window in the engine runs on an audited
+    // bounded frame (shard carries, k+1 priority rows, |langs| codes —
+    // see the KNOWN-BOUNDED comments at each site), so WindowExec's
+    // single-partition WARN is pure noise in job logs and artifacts
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
+    spark
   }
 
   def rawSource(spark: SparkSession, c: JobConfig): DataFrame =

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.jobs.Jobs
 
 /** Round-close codegen audit: runs every headline query at the given
   * SF and reports any whole-stage-codegen compile failure (Spark
@@ -14,12 +14,7 @@ import org.apache.spark.sql.SparkSession
   */
 object CodegenAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Jobs.session("CodegenAudit")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
 

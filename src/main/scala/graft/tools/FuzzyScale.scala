@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.engine.Dedup
-import org.apache.spark.sql.SparkSession
+import graft.jobs.Jobs
 import org.apache.spark.sql.functions._
 
 /** Dev evidence for the fuzzy-join (record linkage) scale shape at
@@ -91,13 +91,7 @@ object FuzzyScale {
 
   def main(args: Array[String]): Unit = {
     val nRows = if (args.nonEmpty) args(0).toInt else 200000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Jobs.session("FuzzyScale")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.jobs.Jobs
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -35,13 +36,7 @@ object PrefixScale {
 
   def main(args: Array[String]): Unit = {
     val nRows = if (args.nonEmpty) args(0).toLong else 2000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Jobs.session("PrefixScale")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.jobs.Jobs
 
 /** Scratch probe main for local schema/plan/timing inspection. Not
   * part of the driver contract. Current use: recall@3 summary plus a
@@ -8,12 +8,7 @@ import org.apache.spark.sql.SparkSession
   * build dominates a cache-cleared `q_ann_recall` rep). */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Jobs.session("Probe")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     import org.apache.spark.sql.functions._
@@ -44,12 +39,11 @@ object Probe {
     // now-uncached frames, which only re-persist on their next memo
     // ACCESS — shared subtrees then re-execute once per consumer
     // inside the first query, overstating cold cost vs a real first
-    // run (ADVICE r10). The memo clears unpersist + forget, so the
-    // next call rebuilds and re-persists exactly like session start.
+    // run (ADVICE r10). The memo clear unpersists + forgets every
+    // namespace (shard cuts included), so the next call rebuilds and
+    // re-persists exactly like session start.
     def coldReset(): Unit = {
-      graft.engine.Dedup.clearMemos(spark)
-      graft.engine.Similarity.clearMemos(spark)
-      graft.engine.Tables.clearMemos(spark)
+      graft.engine.SessionMemo.clear(spark)
       spark.sqlContext.clearCache()
     }
     // warmup (JIT/codegen), then cold component breakdown

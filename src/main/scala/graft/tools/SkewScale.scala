@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.engine.Scale
-import org.apache.spark.sql.SparkSession
+import graft.jobs.Jobs
 import org.apache.spark.sql.functions._
 
 /** Dev evidence for [[Scale.saltedJoin]] beyond the fixture's uniform
@@ -26,15 +26,10 @@ object SkewScale {
   def main(args: Array[String]): Unit = {
     val nFact = if (args.nonEmpty) args(0).toLong else 8000000L
     val nDim = 100000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Jobs.session("SkewScale")
+    val cpus = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.sparkContext.setLogLevel("WARN")
 
     // half the fact rows hit key 0; the rest spread uniformly

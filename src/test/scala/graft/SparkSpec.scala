@@ -23,7 +23,7 @@ object SparkSpec {
     // every unpartitioned window in the engine runs on an audited
     // bounded frame (the KNOWN-BOUNDED comments at each site), so
     // WindowExec's single-partition WARN is pure noise in test logs —
-    // same scoped silence Bench/Verify apply (a constant partition key
+    // same scoped silence Jobs.session applies (a constant partition key
     // cannot silence it: Spark 4's EliminateWindowPartitions folds it
     // away again)
     org.apache.logging.log4j.core.config.Configurator.setLevel(

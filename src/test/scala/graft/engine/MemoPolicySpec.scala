@@ -1,22 +1,24 @@
 package graft.engine
 
 import graft.SparkSpec
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.storage.StorageLevel
 
-/** The session working-set memo's eviction CONTRACT
-  * ([[Dedup.memoizedPersisted]]): the LRU bound is sized for two
-  * concurrent sfDirs' full working sets (cap/2 keys each — the
-  * inventory is enumerated at the cap's declaration); this spec
-  * guards the policy for whoever adds a working set or a 3rd
-  * concurrent dir. Written against [[Dedup.sigSetMemoCap]] itself so
-  * a resize keeps the contract checked, not the constants. */
+/** The session memo registry's CONTRACT ([[SessionMemo]]): the frame
+  * namespace's LRU bound is sized for two concurrent sfDirs' full
+  * working sets (cap/2 keys each — the inventory is enumerated at the
+  * cap's declaration); the eviction tests guard the policy for whoever
+  * adds a working set or a 3rd concurrent dir, written against
+  * [[SessionMemo.frames]]'s cap itself so a resize keeps the contract
+  * checked, not the constants. The last test pins [[SessionMemo.clear]]
+  * as the ONE cold reset: every namespace, one session only. */
 class MemoPolicySpec extends SparkSpec {
   import spark.implicits._
 
-  private val cap = Dedup.sigSetMemoCap
+  private val cap = SessionMemo.frames.cap
 
   private def ws(tag: String) =
-    Dedup.memoizedPersisted(spark, s"memopolicy|$tag")(
+    SessionMemo.frames(spark, s"memopolicy|$tag")(
       Seq((tag, 1L)).toDF("k", "n"))
 
   test("eviction unpersists: cycling past the cap never leaks cache entries") {
@@ -60,5 +62,33 @@ class MemoPolicySpec extends SparkSpec {
     // dA's head was evicted, and evicted means unpersisted, not orphaned
     assert(byDir("dA").take(nEvicted)
       .forall(_.storageLevel == StorageLevel.NONE))
+  }
+
+  test("clear(spark) drops every namespace's entries of that session only") {
+    val other = spark.newSession()
+    // distinct frame plans per session: the CacheManager is shared
+    // across sessions and matches cached data by plan
+    val frames = Seq(spark, other).zipWithIndex.map { case (s, i) =>
+      Tables.tables(s, ("memopolicy", "t"))(s.range(1).toDF())
+      Tables.spreads(s, ("memopolicy", 1))(1)
+      Tables.counts(s, ("memopolicy", "t"))(1L)
+      Similarity.queryVecMemo(s, "memopolicy")(Seq((0L, Seq(1.0))))
+      Similarity.ivfCentMemo(s, "memopolicy")(Array((0L, IndexedSeq(1.0))))
+      Similarity.kmeansCentMemo(s, "memopolicy")(IndexedSeq(IndexedSeq(1.0)))
+      Similarity.pqBooksMemo(s, "memopolicy")(IndexedSeq.empty)
+      Scale.memoizedShards(s, "memopolicy", 4, lit(1))(lit(0))
+      Scale.memoizedCutsMulti(s, "memopolicy", 4, Seq(lit(1)))(Seq(Seq(0L)))
+      SessionMemo.frames(s, "memopolicy|clear")(s.range(i + 1).toDF())
+    }
+    val namespaces = SessionMemo.namespaces
+    assert(namespaces.forall(ns => ns.size(spark) > 0 && ns.size(other) > 0))
+    val kept = namespaces.map(_.size(other))
+
+    SessionMemo.clear(spark)
+    assert(namespaces.forall(_.size(spark) == 0))
+    assert(namespaces.map(_.size(other)) == kept)
+    assert(frames.head.storageLevel == StorageLevel.NONE)
+    assert(frames.last.storageLevel != StorageLevel.NONE)
+    SessionMemo.clear(other)
   }
 }
